@@ -337,14 +337,21 @@ object Bench {
     // checkpoint the full artifact after each phase: a run killed mid-
     // sweep (driver timeout, disk pressure) still leaves a parseable
     // artifact with everything measured so far; the final write replaces
-    // the snapshot and drops the "partial" marker
+    // the snapshot and drops the "partial" marker. Each write goes to a
+    // sibling temp file and is renamed over the artifact atomically, so a
+    // kill during the write never leaves truncated JSON behind.
     def writeFullArtifact(json: String): Unit = {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
       val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
         "BENCH/bench_full_r05.json")
       try {
-        val p = java.nio.file.Paths.get(fullPath)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, json.getBytes("UTF-8"))
+        val p = Paths.get(fullPath).toAbsolutePath
+        Files.createDirectories(p.getParent)
+        val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
+        try {
+          Files.write(tmp, json.getBytes("UTF-8"))
+          Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
         ()
       } catch {
         case e: Exception =>

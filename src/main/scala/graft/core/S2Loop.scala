@@ -1,9 +1,16 @@
 package graft.core
 
-/** Closed spherical loop with CCW-interior convention. Point containment
-  * is the crossing-parity walk from a fixed origin — the reference's
-  * brute-force kernel, which *defines* the semantics and matches the
-  * indexed path bit-for-bit (reference s2loop.cc:271-320, 565-617).
+/** Closed spherical loop with CCW-interior convention.
+  *
+  * Point containment is crossing parity under the reference's
+  * edge-or-vertex rule. [[bruteForceContains]] walks every edge from a
+  * fixed origin (reference s2loop.cc:605-617) and *defines* the
+  * semantics. [[contains]] answers the same, bit for bit: loops with at
+  * least [[S2Loop.MinVerticesForIndex]] (32) vertices build an
+  * [[S2LoopIndex]] on their [[S2Loop.MaxUnindexedContainsCalls]]th (20th)
+  * call and answer from it from then on (reference s2loop.cc:580-596).
+  * The index is transient and shared by every thread using the loop; a
+  * loop whose index would exceed its build cap keeps brute force.
   *
   * Empty loop = single vertex (0,0,1); full loop = single vertex
   * (0,0,-1). */
@@ -34,9 +41,36 @@ final class S2Loop private (val vertices: Array[V3],
     inside
   }
 
+  @transient @volatile private var containsIndex: Option[S2LoopIndex] = _
+  // racy on purpose: a lost increment only delays the build by one call
+  @transient @volatile private var unindexedCalls = 0
+
   override def contains(p: V3): Boolean = {
     if (!bound.contains(p)) return false
-    bruteForceContains(p)
+    if (numVertices < S2Loop.MinVerticesForIndex) return bruteForceContains(p)
+    var idx = containsIndex
+    if (idx == null) {
+      unindexedCalls += 1
+      if (unindexedCalls < S2Loop.MaxUnindexedContainsCalls) return bruteForceContains(p)
+      idx = index
+    }
+    if (idx.isEmpty) bruteForceContains(p) else idx.get.contains(p)
+  }
+
+  private[core] def indexBuilt: Boolean = containsIndex != null
+
+  /** The containment index, built on first use; None when the loop is
+    * too small or its index would exceed the build cap. */
+  private[core] def index: Option[S2LoopIndex] = {
+    var idx = containsIndex
+    if (idx == null) synchronized {
+      idx = containsIndex
+      if (idx == null) {
+        idx = if (numVertices < S2Loop.MinVerticesForIndex) None else S2LoopIndex.build(this)
+        containsIndex = idx
+      }
+    }
+    idx
   }
 
   /** Signed area in [0, 4π); interior-CCW convention. */
@@ -127,6 +161,12 @@ final class S2Loop private (val vertices: Array[V3],
 }
 
 object S2Loop {
+  /** Smaller loops always use brute force (reference kMaxBruteForceVertices). */
+  final val MinVerticesForIndex = 32
+  /** Calls answered by brute force before the index is built (reference
+    * kMaxUnindexedContainsCalls); one build costs many brute-force calls. */
+  final val MaxUnindexedContainsCalls = 20
+
   val EmptyVertex: V3 = V3(0, 0, 1)
   val FullVertex: V3 = V3(0, 0, -1)
 

@@ -1,10 +1,11 @@
 package graft.core
 
 /** Polygon = loop hierarchy (shells at even depth, holes at odd depth).
-  * Point containment is parity over the loops' crossing-number walks,
+  * Point containment is parity over the loops' [[S2Loop.contains]],
   * identical to the reference's semantics for valid nested polygons
-  * (reference s2polygon.h:296-343; each loop's Contains is the
-  * brute-force kernel of s2loop.cc:605-617). */
+  * (reference s2polygon.h:296-343). Each large loop answers from its own
+  * lazily built index, so a polygon cached once per JVM (see
+  * [[graft.functions.PolyCache]]) indexes once for every thread. */
 final class S2Polygon(val loops: Array[S2Loop]) extends S2Region {
 
   def numLoops: Int = loops.length
@@ -16,8 +17,7 @@ final class S2Polygon(val loops: Array[S2Loop]) extends S2Region {
     var inside = false
     var i = 0
     while (i < loops.length) {
-      if (loops(i).bound.contains(p) && loops(i).bruteForceContains(p))
-        inside = !inside
+      if (loops(i).contains(p)) inside = !inside
       i += 1
     }
     inside

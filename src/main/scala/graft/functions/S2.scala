@@ -3,13 +3,16 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
 /** Column-level API of the engine, in the style of
-  * org.apache.spark.sql.functions. Hot scalar kernels are native Catalyst
-  * expressions (codegen'd); geometry-typed operators (coverings, term
-  * generation, PIP against polygon text) are deterministic Scala UDFs
-  * whose kernels are the exact core implementations. */
+  * org.apache.spark.sql.functions. Hot scalar kernels, and PIP against
+  * polygon text, are native Catalyst expressions (codegen'd);
+  * geometry-typed operators (coverings, term generation) are
+  * deterministic Scala UDFs whose kernels are the exact core
+  * implementations. */
 object S2 {
   import ColumnBridge.{column => toCol, expression => toExpr}
 
@@ -131,18 +134,16 @@ object S2 {
     capQueryTermsUdf(lat, lng, radiusRad)
 
   /** Exact point-in-polygon against a polygon in text format (crossing
-    * parity, reference s2loop.cc:605-617). */
-  val containsUdf = udf { (polyText: String, lat: Double, lng: Double) =>
-    PolyCache.get(polyText).contains(V3.fromLatLngDegrees(lat, lng))
-  }
+    * parity, reference s2loop.cc:605-617): the native `s2_contains`
+    * expression, which looks the text up in [[PolyCache]] without
+    * decoding it. */
   def polygonContains(polyText: Column, latDeg: Column, lngDeg: Column): Column =
-    containsUdf(polyText, latDeg, lngDeg)
+    contains(polyText, latDeg, lngDeg)
 
-  val containsXYZUdf = udf { (polyText: String, x: Double, y: Double, z: Double) =>
-    PolyCache.get(polyText).contains(V3(x, y, z).normalize)
-  }
+  /** [[polygonContains]] for a direction vector (any scale). */
   def polygonContainsXYZ(polyText: Column, x: Column, y: Column, z: Column): Column =
-    containsXYZUdf(polyText, x, y, z)
+    toCol(S2ContainsXYZ(toExpr(polyText), toExpr(x.cast("double")),
+      toExpr(y.cast("double")), toExpr(z.cast("double"))))
 
   /** Neighbors of a cell at a given level. */
   val neighborsUdf = udf { (id: Long, level: Int) =>
@@ -295,16 +296,106 @@ object S2 {
   }
 }
 
-/** Per-executor cache of parsed polygons (polygon text is typically a
-  * small query-side dimension; parsing once per executor, not per row). */
-object PolyCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, S2Polygon]()
-  def get(text: String): S2Polygon = {
-    var p = cache.get(text)
-    if (p == null) {
-      p = S2TextFormat.parsePolygon(text)
-      if (cache.size < 10000) cache.put(text, p)
+/** A bounded cache of parsed polygons keyed on their text's UTF-8 bytes.
+  *
+  * Lookups never decode the text and never hash all of it: the hash
+  * covers the byte length and [[PolygonTextCache.HashSamples]] bytes at
+  * fixed positions, and a hit is confirmed by a full byte compare. Size is
+  * bounded by total cached vertices; inserting past the bound evicts by
+  * second chance (CLOCK), so polygons looked up again since the last sweep
+  * stay while one-off polygons stream through. A polygon larger than the
+  * whole bound is parsed on every lookup and never cached. */
+class PolygonTextCache(val maxVertices: Long) {
+  import PolygonTextCache._
+
+  private val map = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+  private val clock = new java.util.ArrayDeque[Entry]()
+  private var vertices = 0L // guarded by clock
+  private val hits = new java.util.concurrent.atomic.LongAdder
+  private val misses = new java.util.concurrent.atomic.LongAdder
+
+  def get(text: UTF8String): S2Polygon = {
+    val hash = sampleHash(text)
+    val e = map.get(new Key(text, hash))
+    if (e != null) {
+      hits.increment()
+      if (!e.referenced) e.referenced = true
+      e.poly
+    } else {
+      misses.increment()
+      val poly = S2TextFormat.parsePolygon(text.toString)
+      insert(new Entry(new Key(text.copy(), hash), poly))
+      poly
     }
-    p
+  }
+
+  def get(text: String): S2Polygon = get(UTF8String.fromString(text))
+
+  def hitCount: Long = hits.sum()
+  def missCount: Long = misses.sum()
+  def cachedVertices: Long = clock.synchronized(vertices)
+  def isCached(text: String): Boolean = {
+    val t = UTF8String.fromString(text)
+    map.containsKey(new Key(t, sampleHash(t)))
+  }
+
+  private def insert(e: Entry): Unit = {
+    if (e.weight > maxVertices) return
+    clock.synchronized {
+      if (map.putIfAbsent(e.key, e) == null) {
+        clock.addLast(e)
+        vertices += e.weight
+        while (vertices > maxVertices) {
+          val old = clock.pollFirst()
+          if (old.referenced) {
+            old.referenced = false
+            clock.addLast(old)
+          } else {
+            map.remove(old.key)
+            vertices -= old.weight
+          }
+        }
+      }
+    }
   }
 }
+
+object PolygonTextCache {
+  /** Bytes sampled into a key's hash, besides its length. */
+  final val HashSamples = 64
+
+  private[functions] def sampleHash(t: UTF8String): Int = {
+    val n = t.numBytes
+    val base = t.getBaseObject
+    val off = t.getBaseOffset
+    var h = n
+    if (n <= HashSamples) {
+      var i = 0
+      while (i < n) { h = 31 * h + Platform.getByte(base, off + i); i += 1 }
+    } else {
+      var k = 0
+      while (k < HashSamples) {
+        h = 31 * h + Platform.getByte(base, off + (k.toLong * (n - 1)) / (HashSamples - 1))
+        k += 1
+      }
+    }
+    h
+  }
+
+  private final class Key(val text: UTF8String, override val hashCode: Int) {
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => k.hashCode == hashCode && k.text == text
+      case _ => false
+    }
+  }
+
+  private final class Entry(val key: Key, val poly: S2Polygon) {
+    @volatile var referenced = false
+    val weight: Long = 1L + poly.loops.map(_.numVertices.toLong).sum
+  }
+}
+
+/** The JVM-wide polygon cache behind every polygon-text function and
+  * expression: each distinct polygon text is parsed, and its large loops
+  * indexed, once per executor JVM and shared by all its task threads. */
+object PolyCache extends PolygonTextCache(1L << 20)

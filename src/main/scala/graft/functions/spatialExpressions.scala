@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuinaryExpression, TernaryExpression, BinaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, QuinaryExpression, TernaryExpression, BinaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -30,7 +30,10 @@ object S2SpatialKernels {
   val indexer = new S2TermIndexer()
 
   def polyContains(polyText: UTF8String, lat: Double, lng: Double): Boolean =
-    PolyCache.get(polyText.toString).contains(V3.fromLatLngDegrees(lat, lng))
+    PolyCache.get(polyText).contains(V3.fromLatLngDegrees(lat, lng))
+
+  def polyContainsXYZ(polyText: UTF8String, x: Double, y: Double, z: Double): Boolean =
+    PolyCache.get(polyText).contains(V3(x, y, z).normalize)
 
   def withinDistance(latA: Double, lngA: Double, latB: Double, lngB: Double,
                      radiusRad: Double): Boolean = {
@@ -48,7 +51,7 @@ object S2SpatialKernels {
   }
 
   def polyQueryTerms(polyText: UTF8String): ArrayData =
-    toArrayData(indexer.queryTerms(PolyCache.get(polyText.toString)))
+    toArrayData(indexer.queryTerms(PolyCache.get(polyText)))
 
   def capQueryTerms(lat: Double, lng: Double, radiusRad: Double): ArrayData =
     toArrayData(indexer.queryTerms(
@@ -56,7 +59,9 @@ object S2SpatialKernels {
 }
 
 /** s2_contains(polyText, latDeg, lngDeg) — exact point-in-polygon
-  * (crossing parity, reference s2loop.cc:605-617). */
+  * (crossing parity, reference s2loop.cc:605-617). The polygon comes
+  * from [[PolyCache]], keyed on the text's bytes, so a row costs a
+  * sampled hash, a byte compare and the (indexed) containment test. */
 case class S2ContainsPoint(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true
@@ -70,6 +75,23 @@ case class S2ContainsPoint(first: Expression, second: Expression, third: Express
       s"graft.functions.S2SpatialKernels.polyContains($p, $la, $ln)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(first = f, second = s, third = t)
+}
+
+/** [[S2ContainsPoint]] for a direction vector (x, y, z), any scale. */
+case class S2ContainsXYZ(first: Expression, second: Expression, third: Expression,
+                         fourth: Expression) extends QuaternaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "s2_contains_xyz"
+  override protected def nullSafeEval(p: Any, a: Any, b: Any, c: Any): Any =
+    S2SpatialKernels.polyContainsXYZ(p.asInstanceOf[UTF8String],
+      a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Double])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (p, a, b, c) =>
+      s"graft.functions.S2SpatialKernels.polyContainsXYZ($p, $a, $b, $c)")
+  override protected def withNewChildrenInternal(f: Expression, s: Expression,
+                                                 t: Expression, u: Expression) =
+    copy(first = f, second = s, third = t, fourth = u)
 }
 
 /** s2_within_distance(latA, lngA, latB, lngB, radiusRad) — true when the

@@ -97,6 +97,15 @@ object S2Joins {
     * skew split applies; pre-salt with [[Skew.saltedTermJoin]] when a
     * region covers a hot cell).
     *
+    * The refine is the codegen'd `s2_contains` expression
+    * ([[graft.functions.S2ContainsPoint]]), not a UDF: each candidate pair
+    * finds its polygon in [[graft.functions.PolyCache]] by the text's bytes
+    * (no decode, no full-text hash), and polygon loops of 32 or more
+    * vertices answer from their shared containment index, so the
+    * containment test costs about the same against a 16 k-vertex polygon
+    * as against a 64-vertex one. S2SpatialJoinRule leaves the plan alone:
+    * the term equality makes it an equi-join already.
+    *
     * Contract: `doc_id` must be UNIQUE in `docs` (same contract as
     * [[Similarity.annTopK]]). The exactly-one-shared-term invariant makes
     * each (doc_id, qid) candidate arrive once PER DOC ROW — with

@@ -74,6 +74,26 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("term join refine is the codegen'd s2_contains, with no ScalaUDF") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import graft.functions.S2ContainsPoint
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
+      val polys = Seq((1, "0:0, 0:35, 30:35, 30:0")).toDF("qid", "poly")
+      val plan = S2Joins.termPolygonJoin(docs, polys).queryExecution.executedPlan
+      def has(p: SparkPlan, f: Expression => Boolean) = p.expressions.exists(_.exists(f))
+      def refines(p: SparkPlan) = p.collect { case n if has(n, _.isInstanceOf[S2ContainsPoint]) => n }
+      val all = refines(plan)
+      assert(all.size == 1, plan)
+      assert(!has(all.head, _.isInstanceOf[ScalaUDF]), all.head)
+      val codegened = plan.collect { case w: WholeStageCodegenExec => refines(w.child) }.flatten
+      assert(codegened == all, plan)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("term join candidate shuffles never carry the document payload") {
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
