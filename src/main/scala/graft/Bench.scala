@@ -522,14 +522,6 @@ object Bench {
     // cell-keyed table produces the identical total order while spilling
     // to disk.) ----
     val bytesPerDoc = 101L // measured: 192M docs ≈ 18 GiB parquet
-    def rmDir(path: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-    }
     var sweepPlan = ""
     val sweepJson =
       if (sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEP", "1") == "0") "[]"
@@ -555,7 +547,8 @@ object Bench {
           try {
             // the 3x point needs the base table's space back; the next
             // bench run re-materializes it (docsPath is existence-checked)
-            if (n == benchDocs * 3) rmDir(docsPath)
+            if (n == benchDocs * 3)
+              SparkEntry.deleteRecursively(new java.io.File(docsPath))
             val need = (n * bytesPerDoc * 21) / 20 + (5L << 30)
             val usable = new java.io.File("/tmp").getUsableSpace
             if (usable < need)
@@ -580,12 +573,13 @@ object Bench {
               val out = s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec},""" +
                 s""""matched":$matchedN,"spill_mem_bytes":${spillMem.get},""" +
                 s""""spill_disk_bytes":${spillDisk.get}}"""
-              rmDir(path)
+              SparkEntry.deleteRecursively(new java.io.File(path))
               out
             }
           } catch {
             case e: Exception =>
-              try rmDir(Bench.docsPath(n)) catch { case _: Exception => }
+              try SparkEntry.deleteRecursively(new java.io.File(Bench.docsPath(n)))
+              catch { case _: Exception => }
               s"""{"docs":$n,"skipped":"error: ${e.toString.replace('"', '\'').take(200)}"}"""
           }
         }
@@ -696,7 +690,10 @@ object Bench {
 
   private def r4d(x: Double): Double = math.rint(x * 10000) / 10000
 
-  private def jsonStr(s: String): String =
+  /** JSON string literal: backslash, quote and ALL control chars (< 0x20)
+    * escaped — a tab or CR in a gate's SQL would otherwise make a reader's
+    * json.load fail (Verify's oracle_sql.json uses it too). */
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -169,26 +169,24 @@ object Dedup {
                                     numHashes: Int, bands: Int): Column =
     bandKeysKernel(textCol, lit(shingleN), lit(numHashes), lit(bands))
 
+  /** (id, term) rows, one per packed LSH band key of `textCol`. */
+  private def bandTerms(df: DataFrame, idCol: String, textCol: String,
+                        shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
+    // the kernel derives rows = numHashes / bands; a remainder would
+    // silently drop trailing min-hashes and weaken LSH precision
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    df.select(col(idCol).as("id"),
+      explode(bandKeysColumn(col(textCol), shingleN, numHashes, bands)).as("term"))
+  }
+
   /** Candidate near-duplicate pairs via MinHash LSH: docs sharing ≥1 band.
     * Returns (id_a, id_b) with id_a < id_b, distinct. The join is an
     * equi-join on the packed band key — broadcast/SMJ/AQE-skew all apply. */
   def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16): DataFrame = {
-    // the kernel derives rows = numHashes / bands; a remainder would
-    // silently drop trailing min-hashes and weaken LSH precision
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sig = df
-      .select(col(idCol).as("id"),
-        explode(bandKeysKernel(col(textCol), lit(shingleN), lit(numHashes),
-          lit(bands))).as("bk"))
-    val a = sig.select(col("bk"), col("id").as("id_a"))
-    val b = sig.select(col("bk"), col("id").as("id_b"))
-    a.join(b, "bk")
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+                        bands: Int = 16): DataFrame =
+    TermPairs.selfPairs(bandTerms(df, idCol, textCol, shingleN, numHashes, bands))
 
   /** Exact n-gram Jaccard similarity of two text columns (expression). */
   def jaccard(textA: Column, textB: Column, n: Int): Column = {
@@ -252,17 +250,12 @@ object Dedup {
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, maxIters: Int = 10): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sig = df
-      .select(col(idCol).as("id"),
-        explode(bandKeysKernel(col(textCol), lit(shingleN), lit(numHashes),
-          lit(bands))).as("bk"))
+    val sig = bandTerms(df, idCol, textCol, shingleN, numHashes, bands)
     // O(m) star edges per bucket: member <-> bucket min (undirected, so
     // labels can flow THROUGH a shared member into another bucket's rep —
     // a one-directional member->rep scheme never merges two buckets that
     // share only a non-minimal member)
-    val star = sig.groupBy("bk").agg(min("id").as("rep"), collect_set("id").as("ids"))
+    val star = sig.groupBy("term").agg(min("id").as("rep"), collect_set("id").as("ids"))
       .select(explode(col("ids")).as("id"), col("rep"))
       .where(col("id") =!= col("rep"))
     val edges = star.unionByName(
@@ -332,20 +325,23 @@ object Dedup {
     * at least one of four 16-bit chunks (pigeonhole: guarantees recall for
     * Hamming distance ≤ 3), verified by exact Hamming ≤ `maxHamming`. */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simHash(col(textCol)).as("sig"))
-    val chunks = sigs.select(col("id"), col("sig"),
+                   maxHamming: Int = 3): DataFrame =
+    chunkHammingPairs(
+      df.select(col(idCol).as("id"), simHash(col(textCol)).as("sig")), maxHamming)
+
+  /** Chunk-LSH pair search over an (id, sig) table of 64-bit signatures:
+    * [[TermPairs.selfPairs]] over the four 16-bit chunks (the signature is
+    * the one fixed-width scalar riding along), verified by exact Hamming
+    * ≤ `maxHamming`. Returns (id_a, id_b, hamming), id_a < id_b. */
+  private[graft] def chunkHammingPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
+    val chunks = sigs.select(col("id"),
       explode(array((0 until 4).map { c =>
         struct(lit(c).as("chunk"),
           shiftrightunsigned(col("sig"), c * 16).bitwiseAND(lit(0xFFFFL)).as("val"))
-      }.toIndexedSeq: _*)).as("ck"))
-    val a = chunks.select(col("ck"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = chunks.select(col("ck"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, "ck")
-      .where(col("id_a") < col("id_b"))
+      }.toIndexedSeq: _*)).as("term"), col("sig"))
+    TermPairs.selfPairs(chunks)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
       .where(col("hamming") <= maxHamming)
   }
 }

@@ -409,7 +409,14 @@ object Multimodal {
       * chunk offsets, and the general stsc chunk→sample mapping. None
       * when the bytes are not an MP4 (must open with ftyp) or any sample
       * table is structurally inconsistent. Works on any MP4 whose
-      * samples ImageIO can decode (the 'jpeg' Motion-JPEG entry here). */
+      * samples ImageIO can decode (the 'jpeg' Motion-JPEG entry here).
+      *
+      * Assumes a CONSTANT frame duration: usecPerSample is the first
+      * stts entry's delta; later entries are ignored.
+      *
+      * Bounded on hostile input: sample tables must fit in the file, the
+      * stsc lookup is a monotone cursor (O(chunks + entries)), and None
+      * comes back once the copied samples exceed 4× the file size. */
     def demuxMp4(bytes: Array[Byte]): Option[(Seq[Array[Byte]], Int, Int, Long)] = {
       if (bytes == null || bytes.length < 16) return None
       def str(p: Int): String = new String(bytes, p, 4, "US-ASCII")
@@ -471,7 +478,7 @@ object Multimodal {
               cur.width = u16At(entry + 32); cur.height = u16At(entry + 34)
             case "stsz" if cur != null && bEnd - body >= 12 =>
               val fixed = u32At(body + 4); val cnt = u32At(body + 8)
-              if (cnt >= 0 && cnt < (1L << 24)) {
+              if (cnt >= 0 && cnt < (1L << 24) && cnt <= bytes.length) {
                 val m = cnt.toInt
                 cur.sizes =
                   if (fixed != 0) Array.fill(m)(fixed)
@@ -506,21 +513,24 @@ object Multimodal {
             t.chunkOffsets == null || t.chunkOffsets.isEmpty ||
             t.stsc == null || t.stsc.isEmpty) return None
         val frames = collection.mutable.ArrayBuffer[Array[Byte]]()
+        // a well-formed file's samples are disjoint slices of it
+        val maxCopied = 4L * bytes.length
+        var copied = 0L
         var s = 0
         var c = 0 // 0-based chunk index
+        var e = 0 // stsc entries with first_chunk <= c+1 (a sorted prefix)
         while (s < t.sizes.length && c < t.chunkOffsets.length) {
           // samples-per-chunk in effect for 1-based chunk c+1: the last
-          // stsc entry whose first_chunk <= c+1 (entries are sorted)
-          var spc = t.stsc(0)._2
-          var i = 0
-          while (i < t.stsc.length && t.stsc(i)._1 <= c + 1) {
-            spc = t.stsc(i)._2; i += 1
-          }
+          // stsc entry whose first_chunk <= c+1; the prefix only grows
+          while (e < t.stsc.length && t.stsc(e)._1 <= c + 1) e += 1
+          val spc = t.stsc(math.max(0, e - 1))._2
           var off = t.chunkOffsets(c)
           var j = 0L
           while (j < spc && s < t.sizes.length) {
             val len = t.sizes(s)
             if (off < 0 || len < 0 || off + len > bytes.length) return None
+            copied += len
+            if (copied > maxCopied) return None
             frames += java.util.Arrays.copyOfRange(
               bytes, off.toInt, (off + len).toInt)
             off += len; s += 1; j += 1
@@ -546,7 +556,8 @@ object Multimodal {
       * the frame whose presentation time covers `offsetMs` (index =
       * offsetMs / msPerFrame, clamped), decode it via javax.imageio,
       * bilinear-resize to w x h. None when the bytes are not a
-      * demuxable video or the frame is undecodable. */
+      * demuxable video or the frame is undecodable. Assumes a constant
+      * frame duration (for MP4 the first stts delta only). */
     def decodeFrameReal(bytes: Array[Byte], offsetMs: Long, w: Int,
                         h: Int): Option[Array[Float]] =
       demuxVideo(bytes).flatMap { case (frames, _, _, usec) =>
@@ -714,21 +725,10 @@ object Multimodal {
     nearDupPairsFromSigs(perceptualHashesReal(media, decodeW, decodeH), maxHamming)
 
   /** Chunk-LSH pair search over any (media_ref, phash) signature table. */
-  def nearDupPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    val chunks = sigs.select(col("media_ref"), col("phash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftrightunsigned(col("phash"), c * 16).bitwiseAND(lit(0xFFFFL)).as("val"))
-      }.toIndexedSeq: _*)).as("ck"))
-    val a = chunks.select(col("ck"), col("media_ref").as("ref_a"), col("phash").as("sig_a"))
-    val b = chunks.select(col("ck"), col("media_ref").as("ref_b"), col("phash").as("sig_b"))
-    a.join(b, "ck")
-      .where(col("ref_a") < col("ref_b"))
-      .select(col("ref_a"), col("ref_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
+  def nearDupPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame =
+    Dedup.chunkHammingPairs(
+      sigs.select(col("media_ref").as("id"), col("phash").as("sig")), maxHamming)
+      .select(col("id_a").as("ref_a"), col("id_b").as("ref_b"), col("hamming"))
 
   /** Audio energy windows: decode PCM (stub), then REAL framing math —
     * `frameMs` windows every `hopMs`, RMS per window, silence flag. One

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -23,20 +24,32 @@ object RegionJoins {
   val unionContainsUdf = udf { (a: Array[Long], b: Array[Long]) =>
     S2CellUnion.containsUnion(a, b) }
 
-  /** Inner join of two region tables on covering intersection. Both sides
-    * arbitrary size; one term equi-join shuffle + exact cell-union refine.
-    * Left columns (leftId, leftCells) vs right (rightId, rightCells). */
-  def intersectsJoin(left: DataFrame, leftId: String, leftCells: String,
-                     right: DataFrame, rightId: String, rightCells: String): DataFrame = {
-    val l = left.select(col(leftId).as("lid"), col(leftCells).as("lcells"))
-      .withColumn("term", explode(indexTermsUdf(col("lcells"))))
-    val r = right.select(col(rightId).as("rid"), col(rightCells).as("rcells"))
-      .withColumn("term", explode(queryTermsUdf(col("rcells"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
-      .where(unionIntersectsUdf(col("lcells"), col("rcells")))
-      .select("lid", "rid")
+  /** (lid, rid, lpay, rpay) candidates of the joins below: ids-only covering
+    * terms through [[TermPairs.pairs]] (deduped: coverings share many terms),
+    * then each side's payload re-joins by id. Ids must be unique per side. */
+  private def regionPairs(left: DataFrame, leftId: String, leftPay: String,
+                          right: DataFrame, rightId: String, rightPay: String,
+                          idxTerms: UserDefinedFunction,
+                          qryTerms: UserDefinedFunction): DataFrame = {
+    val l = left.select(col(leftId).as("lid"), col(leftPay).as("lpay"))
+    val r = right.select(col(rightId).as("rid"), col(rightPay).as("rpay"))
+    TermPairs.pairs(
+      l.select(col("lid"), explode(idxTerms(col("lpay"))).as("term")),
+      r.select(col("rid"), explode(qryTerms(col("rpay"))).as("term")),
+      dedup = true)
+      .join(l, "lid").join(r, "rid")
   }
+
+  /** Inner join of two region tables on covering intersection. Both sides
+    * arbitrary size: ids-only term candidates + exact cell-union refine.
+    * Left columns (leftId, leftCells) vs right (rightId, rightCells); ids
+    * must be unique per side. */
+  def intersectsJoin(left: DataFrame, leftId: String, leftCells: String,
+                     right: DataFrame, rightId: String, rightCells: String): DataFrame =
+    regionPairs(left, leftId, leftCells, right, rightId, rightCells,
+      indexTermsUdf, queryTermsUdf)
+      .where(unionIntersectsUdf(col("lpay"), col("rpay")))
+      .select("lid", "rid")
 
   /** Segment × segment proper-crossing join (BOTH sides large — the
     * road-intersection shape): each segment emits S2RegionTermIndexer
@@ -75,43 +88,35 @@ object RegionJoins {
           V3.fromLatLngDegrees(a1La, a1Ln), V3.fromLatLngDegrees(a2La, a2Ln),
           V3.fromLatLngDegrees(b1La, b1Ln), V3.fromLatLngDegrees(b2La, b2Ln)) > 0
     }
-    val l = left.select(col(leftId).as("id_a"),
-      col(lat1).cast("double").as("_la1"), col(lng1).cast("double").as("_ln1"),
-      col(lat2).cast("double").as("_la2"), col(lng2).cast("double").as("_ln2"))
-      .withColumn("term",
-        explode(segIdxTerms(col("_la1"), col("_ln1"), col("_la2"), col("_ln2"))))
-    val r = right.select(col(rightId).as("id_b"),
-      col(lat1).cast("double").as("_rb1"), col(lng1).cast("double").as("_rn1"),
-      col(lat2).cast("double").as("_rb2"), col(lng2).cast("double").as("_rn2"))
-      .withColumn("term",
-        explode(segQryTerms(col("_rb1"), col("_rn1"), col("_rb2"), col("_rn2"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("id_a", "id_b")
-      .where(crosses(col("_la1"), col("_ln1"), col("_la2"), col("_ln2"),
-        col("_rb1"), col("_rn1"), col("_rb2"), col("_rn2")))
+    // (id, 4 endpoint doubles, term): the endpoints are all the refine reads
+    def ends(s: String) = (1 to 4).map(i => s"_$s$i")
+    def side(df: DataFrame, id: String, s: String, terms: UserDefinedFunction) =
+      df.select(col(id).as(s"id_$s") +: Seq(lat1, lng1, lat2, lng2).zip(ends(s))
+        .map { case (c, e) => col(c).cast("double").as(e) }: _*)
+        .withColumn("term", explode(terms(ends(s).map(col): _*)))
+    TermPairs.pairs(side(left, leftId, "a", segIdxTerms),
+      side(right, rightId, "b", segQryTerms), dedup = true)
+      .where(crosses((ends("a") ++ ends("b")).map(col): _*))
       .select("id_a", "id_b")
   }
 
+  private val polyIndexTermsUdf = udf { (text: String) =>
+    indexer.indexTerms(graft.functions.PolyCache.get(text)) }
+  private val polyQueryTermsUdf = udf { (text: String) =>
+    indexer.queryTerms(graft.functions.PolyCache.get(text)) }
+
   /** Exact polygon×polygon intersects join (polygon text columns, both
-    * sides arbitrary size): covering-term candidates + exact
+    * sides arbitrary size): ids-only covering-term candidates + exact
     * S2Polygon.intersectsPolygon refine (edge crossings + containment,
-    * reference s2polygon.h:296-343). */
+    * reference s2polygon.h:296-343). Ids must be unique per side. */
   def polygonIntersectsJoin(left: DataFrame, leftId: String, leftPoly: String,
                             right: DataFrame, rightId: String, rightPoly: String): DataFrame = {
-    val idxTerms = udf { (text: String) =>
-      indexer.indexTerms(graft.functions.PolyCache.get(text)) }
-    val qryTerms = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
     val exact = udf { (a: String, b: String) =>
       graft.functions.PolyCache.get(a)
         .intersectsPolygon(graft.functions.PolyCache.get(b)) }
-    val l = left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly"))
-      .withColumn("term", explode(idxTerms(col("lpoly"))))
-    val r = right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly"))
-      .withColumn("term", explode(qryTerms(col("rpoly"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
-      .where(exact(col("lpoly"), col("rpoly")))
+    regionPairs(left, leftId, leftPoly, right, rightId, rightPoly,
+      polyIndexTermsUdf, polyQueryTermsUdf)
+      .where(exact(col("lpay"), col("rpay")))
       .select("lid", "rid")
   }
 
@@ -137,30 +142,20 @@ object RegionJoins {
   }
 
   /** Overlap-fraction join (dedup-by-region-overlap shape): polygon-text
-    * tables on both sides, arbitrary size. Covering-term candidates (one
-    * equi-join shuffle carrying id + text per term, never all-pairs), then
-    * the exact boolean-op intersection area refines each candidate pair.
-    * Emits (lid, rid, frac_l, frac_r) for pairs with positive overlap and
-    * frac_l >= minFraction — pairs without a shared term have disjoint
-    * coverings, hence fraction 0, and are correctly absent. */
+    * tables on both sides, arbitrary size, ids unique per side. Ids-only
+    * covering-term candidates, then the exact boolean-op intersection area
+    * refines each pair. Emits (lid, rid, frac_l, frac_r) for pairs with
+    * positive overlap and frac_l >= minFraction — pairs without a shared
+    * term have disjoint coverings, hence fraction 0, and are absent. */
   def overlapFractionsJoin(left: DataFrame, leftId: String, leftPoly: String,
                            right: DataFrame, rightId: String, rightPoly: String,
-                           minFraction: Double = 0.0): DataFrame = {
-    val idxTerms = udf { (text: String) =>
-      indexer.indexTerms(graft.functions.PolyCache.get(text)) }
-    val qryTerms = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
-    val l = left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly"))
-      .withColumn("term", explode(idxTerms(col("lpoly"))))
-    val r = right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly"))
-      .withColumn("term", explode(qryTerms(col("rpoly"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
-      .withColumn("fr", overlapFractionsUdf(col("lpoly"), col("rpoly")))
+                           minFraction: Double = 0.0): DataFrame =
+    regionPairs(left, leftId, leftPoly, right, rightId, rightPoly,
+      polyIndexTermsUdf, polyQueryTermsUdf)
+      .withColumn("fr", overlapFractionsUdf(col("lpay"), col("rpay")))
       .where(col("fr._1") > 0 && col("fr._1") >= minFraction)
       .select(col("lid"), col("rid"),
         col("fr._1").as("frac_l"), col("fr._2").as("frac_r"))
-  }
 
   // ---- cell-union set algebra as columns (SURVEY §2.9) ----
   val unionUdf = udf { (a: Array[Long], b: Array[Long]) => S2CellUnion.union(a, b) }

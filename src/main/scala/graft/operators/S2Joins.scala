@@ -113,12 +113,14 @@ object S2Joins {
     * (n matches × n payload rows); pre-dedupe upstream
     * (`dropDuplicates("doc_id")`) if ids can repeat.
     *
-    * Shuffle discipline (the 100 TB shape): candidate generation runs
-    * over an (doc_id, lat, lng) projection — each doc's ~13 exploded
-    * ancestor terms carry three scalars through the exchange, never the
-    * document payload (`spans` would otherwise ride the shuffle 13×).
-    * Refined (doc_id, qid) matches re-join the full rows once, id-keyed
-    * (AQE broadcasts the match side when selectivity allows).
+    * Likewise `qidCol` must be UNIQUE in `polys`: the text re-joins by qid.
+    *
+    * Shuffle discipline (the 100 TB shape): [[TermPairs.pairs]] meets a
+    * (doc_id, lat, lng, term) doc side with a (qid, term) query side —
+    * neither the document payload (`spans` would ride 13×) nor the
+    * polygon text (~92 KB at 4 k vertices) is on a term row. The text
+    * joins the candidates by qid just before the refine; refined
+    * (doc_id, qid) matches re-join the full doc rows once, id-keyed.
     *
     * Skew handling is AUTOMATIC: before the candidate join, a sampled
     * doc-term histogram (one cheap job over `saltSampleFraction` of the
@@ -126,21 +128,17 @@ object S2Joins {
     * `saltThreshold` — the reference's own motivating skew case, a
     * continent-sized region's coarse ancestor term matching a whole
     * clustered doc population (s2density_tree.h:45-50) — and the join
-    * runs through [[Skew.saltedTermJoin]]: hot-term doc rows spread over
+    * is salted by [[TermPairs.pairs]]: hot-term doc rows spread over
     * `hash(doc_id) % saltFactor` sub-keys, region rows replicated only
     * for those terms. Results are identical (plan-level rebalancing
     * only); AQE skew split remains as backstop. Set `saltThreshold <= 0`
     * to disable detection entirely.
     *
-    * The detection job itself is a fixed ~0.3 s cost, so it is SIZE-GATED:
-    * it only runs when the doc side's optimizer size estimate is at least
-    * `minDetectBytes` (default 64 MB — half a default shuffle partition:
-    * below that the whole doc side is one reducer's comfortable load, so
-    * the worst straggler is bounded by the input itself and cannot repay
-    * a detection job; the skew A/B's measured salted win is at ~200 MB,
-    * comfortably above the gate). At 100 TB the gate always passes; set
-    * `minDetectBytes <= 0` to force detection regardless of size (tests,
-    * A/B harnesses). */
+    * The detection job is a fixed ~0.3 s cost, so it only runs when the
+    * doc side's optimizer size estimate is at least `minDetectBytes`
+    * (default 64 MB, half a default shuffle partition: below that one
+    * reducer holds the whole doc side; the skew A/B's salted win is at
+    * ~200 MB). `minDetectBytes <= 0` forces detection (tests, A/B). */
   def termPolygonJoin(docs: DataFrame, polys: DataFrame,
                       polyTextCol: String = "poly", qidCol: String = "qid",
                       indexer: S2TermIndexer = new S2TermIndexer(),
@@ -148,12 +146,10 @@ object S2Joins {
                       saltSampleFraction: Double = 0.001,
                       minDetectBytes: Long = 64L << 20): DataFrame = {
     val queryTermsUdf = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text))
-    }
+      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
     val slim = docs.select(col("doc_id"),
       col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
-    val d = docIndexTerms(slim, indexer)
-    val q = polys.select(col(qidCol), col(polyTextCol),
+    val q = polys.select(col(qidCol),
       explode(queryTermsUdf(col(polyTextCol))).as("term"))
     val salts: Map[String, Int] =
       if (saltThreshold <= 0 ||
@@ -169,16 +165,10 @@ object S2Joins {
         Skew.hotTerms(docIndexTerms(src, indexer).select("term"), "term",
           threshold = math.max(1L, (saltThreshold * f).toLong))
       }
-    val joined =
-      if (salts.isEmpty) d.join(q, "term")
-      else Skew.saltedTermJoin(d, q, "term", col("doc_id"), salts)
-    val matches = joined
-      .drop("term")
-      // no (doc, qid) dedup: a point doc's plain ancestor tokens meet a
-      // region query's plain tokens (its DISJOINT covering cells) at most
-      // once, so each candidate pair arrives exactly once — the invariant
-      // S2SpatialJoinRule proves and SpatialSqlJoinSpec fuzz-tests. Dropping
-      // the dedup removes a full shuffle of the candidate set.
+    // no (doc, qid) dedup: each candidate pair arrives exactly once — the
+    // invariant S2SpatialJoinRule proves and SpatialSqlJoinSpec fuzz-tests
+    val matches = TermPairs.pairs(docIndexTerms(slim, indexer), q, salts = salts)
+      .join(polys.select(col(qidCol), col(polyTextCol)), qidCol)
       .where(S2.polygonContains(col(polyTextCol), col("lat"), col("lng")))
       .select(col("doc_id"), col(qidCol))
     docs.join(matches, "doc_id")
@@ -640,7 +630,6 @@ object S2Joins {
     val docTerms = docIndexTerms(
       docs.select(col(idCol), col(latCol).cast("double").as(latCol),
         col(lngCol).cast("double").as(lngCol)), indexer, latCol, lngCol)
-      .select(col(idCol), col(latCol), col(lngCol), col("term"))
     val capTerms = udf { (lat: Double, lng: Double, r: Double) =>
       indexer.queryTerms(S2Cap.fromCenterAngle(V3.fromLatLngDegrees(lat, lng), r))
     }
@@ -667,17 +656,14 @@ object S2Joins {
       val chord2 = S1ChordAngle.fromRadians(r)
       val q = unsatisfied.withColumn("term",
         explode(capTerms(col(tLatCol), col(tLngCol), lit(r))))
-      // No (qid, doc) dedup needed: a point doc's index terms are plain
-      // ancestor tokens, and the only plain tokens a cap query emits are
-      // its covering cells — a normalized DISJOINT union, of which at
-      // most one lies on the doc's ancestor chain, so each (target, doc)
-      // candidate pair arrives exactly once (same invariant
-      // S2SpatialJoinRule relies on; fuzz-tested in SpatialSqlJoinSpec).
-      // Skipping the dedup also lets Spark's WindowGroupLimit rewrite
+      // No (qid, doc) dedup: a cap query's plain tokens are its DISJOINT
+      // covering cells, at most one on a doc's ancestor chain, so each
+      // (target, doc) pair arrives once (see termPolygonJoin). Skipping
+      // the dedup also lets Spark's WindowGroupLimit rewrite
       // run the rank filter map-side: each input task forwards at most k
       // rows per target into the window exchange, so the shuffled volume
       // is O(tasks × targets × k), independent of candidate count.
-      val cands = docTerms.join(q, "term").drop("term")
+      val cands = TermPairs.pairs(docTerms, q)
         .withColumn("dist2", dist2(col(tLatCol), col(tLngCol), col(latCol), col(lngCol)))
         .withColumn("rank", row_number().over(w))
         .where(col("rank") <= k)

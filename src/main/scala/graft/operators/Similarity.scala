@@ -59,18 +59,21 @@ object Similarity {
 
   def bruteForceTopK(data: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
-                     k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val joined = data.select(col(idCol).as("id"), col(vecCol).as("v"),
+                     k: Int): DataFrame =
+    topK(data.select(col(idCol).as("id"), col(vecCol).as("v"),
         normUdf(col(vecCol)).as("nv"))
       .crossJoin(broadcast(queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"),
-        normUdf(col(qvecCol)).as("nq"))))
-      .withColumn("score", cosinePre(dotUdf(col("v"), col("qv")), col("nv"), col("nq")))
-      .select("qid", "id", "score") // drop vectors before the shuffle
+        normUdf(col(qvecCol)).as("nq")))), k)
+
+  /** Scores (qid, id, v, nv, qv, nq) rows, drops the vectors before the
+    * window shuffle, and keeps each query's top `k` (ties by id). */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    joined.withColumn("rank", row_number().over(w))
+    pairs.select(col("qid"), col("id"),
+        cosinePre(dotUdf(col("v"), col("qv")), col("nv"), col("nq")).as("score"))
+      .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .select("qid", "id", "score", "rank")
   }
 
   /** Deterministic pseudo-random hyperplane component: plane `p`,
@@ -112,10 +115,12 @@ object Similarity {
   def srpBucket(vec: Column, nPlanes: Int): Column =
     srpBucketsKernel(vec, lit(nPlanes), lit(1)).getItem(0)
 
-  /** (table, bucket) struct rows for a vector — explode for the LSH
-    * equi-join. */
-  private def tableBuckets(vec: Column, nPlanes: Int, tables: Int): Column =
-    srpBucketsKernel(vec, lit(nPlanes), lit(tables))
+  /** (id, term = (table, bucket)) rows, one per SRP table, of an (id, …) frame. */
+  private def bucketTerms(df: DataFrame, vec: String, nPlanes: Int, tables: Int) = {
+    val id = col(df.columns.head)
+    df.select(id, posexplode(srpBucketsKernel(col(vec), lit(nPlanes), lit(tables)))
+      .as(Seq("_t", "_b"))).select(id, struct("_t", "_b").as("term"))
+  }
 
   /** ANN top-k via SRP-LSH with multi-probe: queries match data in any of
     * `tables` independent hash tables; candidates then ranked by exact
@@ -128,56 +133,35 @@ object Similarity {
     * (even with identical vectors) would each claim a top-k rank slot —
     * pre-dedupe upstream (`dropDuplicates(idCol)`) if ids can repeat.
     *
-    * Shuffle discipline: bucket rows and the candidate-pair dedup carry
-    * (id, table, bucket) scalars only; data vectors ride exactly one
-    * id-keyed join to co-locate them for scoring, the (small) query side
-    * broadcasts, and the final top-k window shuffles scored scalars. */
+    * Shuffle discipline: [[TermPairs.pairs]] over (id, (table, bucket))
+    * rows, deduped on ids, so bucket rows and the pair dedup carry ids
+    * only; data vectors ride one id-keyed join to the scoring, the (small)
+    * query side broadcasts, the top-k window shuffles scored scalars. */
   def annTopK(data: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, qidCol: String, qvecCol: String,
               k: Int, nPlanes: Int = 12, tables: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dBase = data.select(col(idCol).as("id"), col(vecCol).as("v"),
       normUdf(col(vecCol)).as("nv"))
     val qBase = queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"),
       normUdf(col(qvecCol)).as("nq"))
-    val dBuckets = dBase.select(col("id"),
-      posexplode(tableBuckets(col("v"), nPlanes, tables)).as(Seq("_t", "_b")))
-    val qBuckets = qBase.select(col("qid"),
-      posexplode(tableBuckets(col("qv"), nPlanes, tables)).as(Seq("_t", "_b")))
-    val candIds = dBuckets.join(broadcast(qBuckets), Seq("_t", "_b"))
-      .select("qid", "id").distinct()
-    val scored = candIds
-      .join(dBase, "id")
-      .join(broadcast(qBase), "qid")
-      .withColumn("score", cosinePre(dotUdf(col("v"), col("qv")), col("nv"), col("nq")))
-      .select("qid", "id", "score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("qid", "id", "score", "rank")
+    val candIds = TermPairs.pairs(bucketTerms(dBase, "v", nPlanes, tables),
+      broadcast(bucketTerms(qBase, "qv", nPlanes, tables)), dedup = true)
+    topK(candIds.join(dBase, "id").join(broadcast(qBase), "qid"), k)
   }
 
   /** Embedding-cosine near-duplicate pairs: all pairs with cosine ≥
     * threshold, candidates from SRP buckets (equi-join), exact verify.
     *
-    * Shuffle discipline (the 100 TB shape): candidate generation and the
-    * pair `distinct` run over an ids-only projection — the bucket
-    * self-join and dedup exchanges carry (table, bucket, id) scalars,
-    * never embeddings. Vectors ride exactly two id-keyed hash joins (once
-    * per pair side) to co-locate them for the exact verify, and each pair
-    * is scored once (dedup happens before the dot kernel). */
+    * Shuffle discipline (the 100 TB shape): [[TermPairs.selfPairs]] over
+    * (id, (table, bucket)) rows — no embedding crosses the bucket join or
+    * pair dedup. Vectors ride two id-keyed joins (one per pair side) to
+    * the exact verify; each pair is scored once, after the dedup. */
   def cosineNearDupPairs(data: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, nPlanes: Int = 8,
                          tables: Int = 4): DataFrame = {
     val base = data.select(col(idCol).as("id"), col(vecCol).as("v"),
       normUdf(col(vecCol)).as("n"))
-    val buckets = base.select(col("id"),
-      posexplode(tableBuckets(col("v"), nPlanes, tables)).as(Seq("_t", "_b")))
-    val pairs = buckets.as("a").join(buckets.as("b"), Seq("_t", "_b"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    pairs
+    TermPairs.selfPairs(bucketTerms(base, "v", nPlanes, tables))
       .join(base.select(col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a")), "id_a")
       .join(base.select(col("id").as("id_b"), col("v").as("v_b"), col("n").as("n_b")), "id_b")
       .withColumn("cosine", cosinePre(dotUdf(col("v_a"), col("v_b")), col("n_a"), col("n_b")))

@@ -600,6 +600,38 @@ class PipelineOpsSpec extends AnyFunSuite {
       Array[Byte](0, 0, 0, (body.length + 8).toByte) ++ "moov".getBytes ++ body
     }
     assert(codec.demuxMp4(mp4.take(8) ++ bomb).isEmpty)
+    // table bombs inside a well-formed video track: an stco of ~1 M chunks
+    // all at offset 0 with near-file-length fixed-size samples (would copy
+    // ~1 M × the file), and ~1 M stsc entries over ~1 M chunks (a
+    // per-chunk stsc rescan is ~10^12 steps) — both must give up quickly
+    def be(words: Long*): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(4 * words.length)
+      words.foreach(w => buf.putInt(w.toInt))
+      buf.array()
+    }
+    def mp4Box(typ: String, body: Array[Byte]): Array[Byte] =
+      be(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
+    val ftyp = mp4.take(java.nio.ByteBuffer.wrap(mp4).getInt(0))
+    def videoTrack(stbl: Array[Byte]): Array[Byte] =
+      ftyp ++ mp4Box("moov", mp4Box("trak", mp4Box("mdia",
+        mp4Box("hdlr", be(0, 0) ++ "vide".getBytes("US-ASCII")) ++
+          mp4Box("minf", mp4Box("stbl", stbl)))))
+    def stco(n: Int) = mp4Box("stco", be(0, n.toLong) ++ new Array[Byte](4 * n))
+    def stsz(fixed: Long, n: Int) = mp4Box("stsz", be(0, fixed, n.toLong))
+    def stsc(spcs: Int, spc: Long) = mp4Box("stsc", be(0, spcs.toLong) ++
+      be((0 until spcs).flatMap(i => Seq(i + 1L, spc, 1L)): _*))
+    // the same layouts at a sane size parse: four samples out of four chunks
+    Seq(stsc(1, 1) ++ stsz(16, 4), stsc(3, 1) ++ stsz(1, 4)).foreach { t =>
+      assert(codec.demuxMp4(videoTrack(stco(4) ++ t)).map(_._1.length).contains(4))
+    }
+    val chunks = 1 << 20
+    val fileLen = videoTrack(stco(chunks) ++ stsc(1, 1) ++ stsz(0, chunks)).length
+    val repeated = videoTrack(stco(chunks) ++ stsc(1, 1) ++ stsz(fileLen - 64L, chunks))
+    val manyStsc = videoTrack(stco(chunks) ++ stsc(chunks - 1, 0) ++ stsz(1, 1))
+    val t0 = System.nanoTime()
+    assert(codec.demuxMp4(repeated).isEmpty)
+    assert(codec.demuxMp4(manyStsc).isEmpty)
+    assert((System.nanoTime() - t0) / 1e9 < 10, "table bombs must fail fast")
     // fuzz: garbage, truncations, single-byte mutations never throw
     val fuzz = new scala.util.Random(13)
     (1 to 200).foreach { _ =>

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -94,9 +95,28 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  def isTermJoin(j: BaseJoinExec): Boolean =
+    j.leftKeys.exists(_.references.exists(_.name == "term"))
+
+  /** The term joins (a join keyed on `term`) of an executed plan, and the
+    * exchanges of its candidate-pair core: every exchange below a term
+    * join, and every exchange whose subtree joins on terms only (the pair
+    * dedup and the first re-join's candidate side). */
+  def termJoinCore(plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val termJoins = plan.collect { case j: BaseJoinExec if isTermJoin(j) => j }
+    val below = termJoins.flatMap(_.collect { case e: Exchange => e })
+    val above = plan.collect {
+      case e: Exchange if e.exists(_.isInstanceOf[BaseJoinExec]) &&
+        e.collect { case j: BaseJoinExec => j }.forall(isTermJoin) => e
+    }
+    (termJoins, (below ++ above).distinct)
+  }
+
   test("term join candidate shuffles never carry the document payload") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.ArrayType
     // force shuffle joins + non-adaptive plan so every exchange is visible
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -104,21 +124,70 @@ class PlanAuditSpec extends AnyFunSuite {
       val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
       val polys = Seq((1, "0:0, 0:35, 30:35, 30:0"),
         (2, "-40:-80, -40:-30, -10:-30, -10:-80")).toDF("qid", "poly")
-      val joined = S2Joins.termPolygonJoin(docs, polys)
-      val exchanges = joined.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e }
-      assert(exchanges.nonEmpty)
-      // `spans` (the interleaved payload) may ride exactly ONE exchange:
-      // the final id-keyed payload re-join — never the per-term explode
-      // (13 terms/doc), the term equi-join, or the candidate dedup
-      val spansCarrying = exchanges.filter(_.output.exists(_.name == "spans"))
-      assert(spansCarrying.size <= 1,
-        spansCarrying.map(_.output.map(_.name).mkString(",")).mkString("\n"))
-      assert(exchanges.size - spansCarrying.size >= 2)
+      val coverer = new S2RegionCoverer(16)
+      def capCells(i: Int) = coverer.getCovering(
+        S2Cap.fromCenterAngle(V3.fromLatLngDegrees(i * 6.0 - 85, i * 11.0 - 170), 0.05))
+      val cells = (0 until 20).map(i => (i, capCells(i))).toDF("id", "cells")
+      val polyTable = (0 until 20).map { i =>
+        val (la, ln) = (i * 4.0 - 40, i * 9.0 - 90)
+        (i, s"$la:$ln, $la:${ln + 5}, ${la + 5}:${ln + 5}, ${la + 5}:$ln")
+      }.toDF("id", "poly")
+      val segs = (0 until 20).map(i => (i, i * 2.0, i * 3.0, i * 2.0 + 5, i * 3.0 + 5,
+        s"segment $i")).toDF("sid", "lat1", "lng1", "lat2", "lng2", "label")
+      val texts = (0 until 20).map(i => (s"d$i", s"the quick brown fox $i jumps")).toDF("doc_id", "text")
+      val vecs = (0 until 20).map(i => (i.toLong, Array.tabulate(8)(j => ((i * 7 + j) % 5).toFloat)))
+        .toDF("vec_id", "embedding")
+      val queries = vecs.where(col("vec_id") < 3).select(col("vec_id").as("qid"),
+        col("embedding").as("qv"))
+      // every term-join caller: its candidate-pair exchanges may carry ids,
+      // the term and fixed-width scalars, never text, cells, vectors or spans
+      val callers: Seq[(String, DataFrame)] = Seq(
+        "termPolygonJoin" -> S2Joins.termPolygonJoin(docs, polys),
+        "intersectsJoin" -> RegionJoins.intersectsJoin(cells, "id", "cells", cells, "id", "cells"),
+        "edgeCrossingJoin" -> RegionJoins.edgeCrossingJoin(segs, "sid", segs, "sid"),
+        "polygonIntersectsJoin" ->
+          RegionJoins.polygonIntersectsJoin(polyTable, "id", "poly", polyTable, "id", "poly"),
+        "overlapFractionsJoin" ->
+          RegionJoins.overlapFractionsJoin(polyTable, "id", "poly", polyTable, "id", "poly"),
+        "minHashCandidates" -> Dedup.minHashCandidates(texts, "doc_id", "text"),
+        "simHashPairs" -> Dedup.simHashPairs(texts, "doc_id", "text"),
+        "annTopK" -> Similarity.annTopK(vecs, "vec_id", "embedding", queries, "qid", "qv", k = 3),
+        "cosineNearDupPairs" -> Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding", 0.9))
+      val textCols = Set("spans", "text", "poly", "lpoly", "rpoly", "lpay", "rpay", "label")
+      val failures = callers.flatMap { case (name, df) =>
+        val (termJoins, core) = termJoinCore(df.queryExecution.executedPlan)
+        val payload = core.flatMap(_.output.filter(a =>
+          a.dataType.isInstanceOf[ArrayType] || textCols(a.name)).map(_.name)).distinct
+        if (termJoins.isEmpty || core.isEmpty) Some(s"$name: no term join or no core exchange")
+        else if (payload.nonEmpty) Some(s"$name: core exchanges carry ${payload.mkString(", ")}")
+        else None
+      }
+      assert(failures.isEmpty, failures.mkString("\n"))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
+  }
+
+  test("termPolygonJoin broadcasts only (qid, term) into its term join") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
+    val polys = Seq((1, "0:0, 0:35, 30:35, 30:0")).toDF("qid", "poly")
+    val joined = S2Joins.termPolygonJoin(docs, polys)
+    joined.collect() // AQE finalizes the plan
+    val plan = joined.queryExecution.executedPlan
+    // the helper's collect descends into AQE query stages
+    val termJoins = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case j: BaseJoinExec if isTermJoin(j) => j }
+    assert(termJoins.size == 1, plan)
+    val build = termJoins.head match {
+      case j: BroadcastHashJoinExec => if (j.buildSide == BuildLeft) j.left else j.right
+      case j => fail(s"term join is not a broadcast hash join: $j")
+    }
+    assert(build.output.map(_.name) == Seq("qid", "term"), build)
   }
 
   test("closest-shapes join is a pure narrow map: zero exchanges") {
